@@ -1,165 +1,74 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, struct, sum, xxhash64}
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.{AtomicInteger, LongAdder}
-
-/** Per-query shuffle-byte accounting (round-11 verdict #3): wall time on a
-  * shared box is noisy to ±0.5 s, so a plan regression that adds an
-  * exchange can hide inside the noise band — shuffle BYTES are
-  * deterministic per plan+data and diff cleanly round over round. Queries
-  * are attributed via a thread-local property set just before each query
-  * runs (Spark captures local properties into every job the thread — and,
-  * through SQLExecution's thread-local capture, its broadcast-exchange
-  * side jobs — submits); stages map to the owning query at job start, and
-  * task-end metrics accumulate under it. Tasks from jobs carrying no
-  * property (speculative scheduler work, anything outside a measured
-  * query) land in `_unattributed` so totals never silently undercount. */
-private final class ShuffleBytesListener extends org.apache.spark.scheduler.SparkListener {
-  val Prop = "graft.bench.query"
-  private val stageToQuery = new ConcurrentHashMap[Int, String]()
-  private val read = new ConcurrentHashMap[String, LongAdder]()
-  private val write = new ConcurrentHashMap[String, LongAdder]()
-  override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-    val q = Option(js.properties).flatMap(p => Option(p.getProperty(Prop)))
-    q.foreach(name => js.stageIds.foreach(sid => stageToQuery.put(sid, name)))
-  }
-  override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-    val q = Option(stageToQuery.get(te.stageId)).getOrElse("_unattributed")
-    val m = te.taskMetrics
-    if (m != null) {
-      read.computeIfAbsent(q, _ => new LongAdder).add(m.shuffleReadMetrics.totalBytesRead)
-      write.computeIfAbsent(q, _ => new LongAdder).add(m.shuffleWriteMetrics.bytesWritten)
-    }
-  }
-  /** Drain the current tallies (bytes read, bytes written) per query.
-    *
-    * The caller must quiesce the ASYNC listener bus first (round-12 ADVICE:
-    * events arrive on Spark's listener threads, so a snapshot taken right
-    * after the last job returns can miss trailing TaskEnd events — or,
-    * worse, count them into the NEXT repeat's tallies, making the
-    * "bytes are deterministic" diffing premise false): [[drainListenerBus]]
-    * does that. `stageToQuery` is NOT cleared here — stage ids are unique
-    * for the SparkContext's lifetime, so a late event for a prior repeat's
-    * stage still attributes to the right query instead of falling into
-    * `_unattributed` (the map is bounded by the bench session's stage
-    * count; it dies with the process). */
-  def snapshotAndReset(): Map[String, (Long, Long)] = {
-    import scala.jdk.CollectionConverters._
-    val ks = (read.keySet.asScala ++ write.keySet.asScala).toSet
-    val out = ks.map { k =>
-      k -> (Option(read.get(k)).map(_.sum).getOrElse(0L),
-        Option(write.get(k)).map(_.sum).getOrElse(0L))
-    }.toMap
-    read.clear(); write.clear()
-    out
-  }
-
-  /** Block until every queued listener event has been delivered.
-    * `LiveListenerBus.waitUntilEmpty` is `private[spark]` — public at the
-    * bytecode level, so plain reflection reaches it (the stable path Spark's
-    * own tests use). If the reflective route ever breaks on a Spark bump,
-    * fall back to polling the tallies until they hold still. */
-  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit = {
-    try {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      val m = bus.getClass.getMethods
-        .filter(_.getName == "waitUntilEmpty")
-        .minBy(_.getParameterCount)
-      if (m.getParameterCount == 0) m.invoke(bus)
-      else m.invoke(bus, java.lang.Long.valueOf(30000L))
-    } catch {
-      case _: Throwable =>
-        def total: Long = {
-          import scala.jdk.CollectionConverters._
-          read.values.asScala.map(_.sum).sum + write.values.asScala.map(_.sum).sum
-        }
-        var prev = -1L
-        var cur = total
-        var spins = 0
-        while (prev != cur && spins < 100) { // stable-for-100ms = drained
-          Thread.sleep(100); prev = cur; cur = total; spins += 1
-        }
-    }
-  }
-}
+import java.lang.management.{ManagementFactory, MemoryType}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+import graft.obs.QueryMetrics
 
 /** Benchmark main: one JSON line with per-query seconds at the target SF.
   *
-  * Throughput harness, not a latency harness: the suite is ~70 independent
-  * queries, most of which leave local[32] mostly idle (a single-row-group
-  * fixture scan is ONE task; a 3-group aggregate uses 3 reducers), so
-  * running them strictly one-after-another measures mostly Spark's
-  * per-query scheduling floor — ~0.2-0.3 s × 70 queries of idle cores. The
-  * suite therefore executes on SPARK_GRAFT_BENCH_THREADS (default 8) driver
-  * threads submitting concurrent jobs into one SparkSession, the standard
-  * multi-tenant shape for a Spark cluster: FAIR scheduling, one pool per
-  * worker thread, so no query starves the rest. `value` is the wall-clock
-  * of the whole measured batch — work/time, the quantity that actually
-  * extrapolates to cluster throughput. Per-query seconds are reported too,
-  * but under concurrency they include scheduler wait: they locate hotspots,
-  * their SUM (also reported, as `sum_query_sec`) exceeds the wall.
-  * SPARK_GRAFT_BENCH_THREADS=1 recovers the old sequential behavior
-  * (value ≈ sum of per-query times).
+  * Throughput harness, not a latency harness: most catalog queries leave
+  * the local cores mostly idle (a single-row-group fixture scan is ONE
+  * task), so running them strictly one-after-another measures mostly
+  * Spark's per-query scheduling floor. The suite therefore executes on
+  * SPARK_GRAFT_BENCH_THREADS (default 8) driver threads submitting
+  * concurrent jobs into one SparkSession, the standard multi-tenant shape
+  * for a Spark cluster: FAIR scheduling, one pool per worker thread, so no
+  * query starves the rest. `value` is the wall-clock of the whole measured
+  * batch. Per-query seconds are reported too, but under concurrency they
+  * include scheduler wait: they locate hotspots, and their SUM (reported
+  * as `sum_query_sec`) exceeds the wall. SPARK_GRAFT_BENCH_THREADS=1 runs
+  * sequentially (value ≈ sum of per-query times).
   *
   * Each query is first executed once against the sf0.001 fixture to pay
-  * one-time costs that are data-independent — plan analysis, whole-stage
-  * code generation, JIT — exactly once, outside the measured run (the
-  * codegen cache keys on generated source, which is identical across scale
-  * factors). The warmup timings also order the measured run longest-first
-  * (LPT scheduling), so the concurrent batch doesn't end on one heavy
+  * data-independent one-time costs (analysis, whole-stage codegen, JIT)
+  * outside the measured run. The warmup timings also order the measured
+  * run longest-first, so the concurrent batch doesn't end on one heavy
   * straggler. Set SPARK_GRAFT_WARMUP=0 to measure cold instead.
   *
-  * Materialization: a plain count() would let Catalyst prune every
-  * projection expression (map-only queries would time a metadata-ish scan),
-  * so the measured action hashes EVERY output column of every row into one
-  * aggregated value — all computed work is forced, only 8 bytes cross to
-  * the driver. A failed query reports -1 and logs to stderr rather than
-  * recording a fast fake timing.
+  * Materialization: the measured action hashes EVERY output column of
+  * every row into one aggregated value (a plain count() would let Catalyst
+  * prune projection work). A failed query reports -1 and logs to stderr
+  * rather than recording a fast fake timing.
   *
   * Output contract: the FINAL stdout line is the totals JSON
-  * (`{"metric":"total","value":<best wall>,"queries":{...},...}`) — nothing
-  * follows it, and build.sbt routes forked stdout through unprefixed so the
-  * driver can `json.loads` the last line. Round-16 contract gap, closed
-  * round 17: the driver's round-over-round comparator reads the per-query
-  * seconds map from this line (`PERF_r16.json` came back with
-  * `per_query: {}` / `n_common: 0` because the map lived only in
-  * BENCH_LOCAL.json), so the final line now carries `"queries"` (seconds,
-  * ms-rounded to keep the line compact; full-precision values still ship in
-  * BENCH_LOCAL.json together with the per-query shuffle bytes). The suite
-  * runs SPARK_GRAFT_BENCH_REPEATS times (default 3 — the committed records are all best-of-3, and repeat 1 pays the per-dir model training); the headline is the
-  * best wall, and every repeat's wall + 1-min load average ships in the
-  * record (`walls`, `load_avg_1m`, `core_probe_sec` — a fixed
-  * single-thread integer loop timed before each repeat, the host-weather
-  * signal load/steal can't see (round-13: same-code walls moved 21→33 s
-  * at load < 0.5) — plus an explicit `contended` flag when the quiet-wait
-  * budget expired with the box still loud) so box contention is
-  * self-diagnosing. Per-query shuffle read/write BYTES ship
-  * in the full record (`shuffle_read_bytes`/`shuffle_write_bytes`, max
-  * across repeats — see [[ShuffleBytesListener]]): bytes are deterministic
-  * where wall time is noisy, so a plan regression that adds an exchange
-  * diffs cleanly round over round.
+  * (`{"metric":"total","value":<best wall>,"queries":{...},...}`) —
+  * nothing follows it, and build.sbt routes forked stdout through
+  * unprefixed so a consumer can `json.loads` the last line. `queries`
+  * carries ms-rounded per-query seconds for round-over-round diffs.
+  * The suite runs SPARK_GRAFT_BENCH_REPEATS times (default 3; repeat 1
+  * pays the per-dir model training); the headline is the best wall, and
+  * every repeat's wall, 1-min load average and core-probe seconds ship in
+  * the record so box contention is self-diagnosing.
+  *
+  * The full record (BENCH_LOCAL.json, or SPARK_GRAFT_BENCH_OUT) adds the
+  * per-query [[QueryMetrics]] tallies (jobs, shuffle bytes, spill, peak
+  * execution memory; max across repeats — deterministic per plan, so they
+  * diff cleanly where wall time is noisy), the query function's build time
+  * and the hashed plan's planning phases from its fastest repeat, and each
+  * repeat's peak heap. Targeted runs use the same main: SPARK_GRAFT_BENCH_ONLY
+  * names the queries, SPARK_GRAFT_SF_DIR the data.
+  *
   * Before anything starts the run gates on a quiet box (load_avg_1m <
   * SPARK_GRAFT_BENCH_MAX_LOAD, default 5, waiting up to
   * SPARK_GRAFT_BENCH_WAIT_SEC, default 300) — see [[awaitQuietBox]].
   */
 object Bench {
 
+  /** One query's timing: wall seconds (-1 on failure), the query
+    * function's build ms, and the measured plan's planning phases in ms. */
+  private final case class QueryRun(sec: Double, buildMs: Long, phasesMs: Map[String, Long])
+
   private def loadAvg1m: Double = {
-    val l = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
+    val l = ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     math.round(l * 100) / 100.0
   }
 
-  /** Host-weather probe (round-13 lesson): a FIXED single-thread integer
-    * loop timed before each repeat. Same-code bench walls moved 21 → 33 s
-    * within one session while 1-min load stayed < 0.5, steal stayed 0 and
-    * the nominal CPU frequency never moved — per-core throughput on a
-    * shared host varies invisibly to every signal `contended`/`load_avg_1m`
-    * can see. The probe's seconds ship per repeat (`core_probe_sec`), so a
-    * reader of the record alone can tell "slow box phase" from "slow code":
-    * identical plans with probe 0.2 s vs 0.4 s is weather, not regression.
-    * JIT is paid by one unrecorded warmup call before the repeats. */
+  /** Host-weather probe: a FIXED single-thread integer loop timed before
+    * each repeat. Per-core throughput on a shared host varies invisibly to
+    * load average and steal, so identical plans with probe 0.2 s vs 0.4 s
+    * read as weather, not regression. */
   private def coreProbeSec(): Double = {
     val t0 = System.nanoTime()
     var x = 0x9E3779B97F4A7C15L
@@ -173,15 +82,11 @@ object Bench {
     math.round((System.nanoTime() - t0) / 1e9 * 1000) / 1000.0
   }
 
-  /** Round-6 verdict #6: a contended box can inflate the recorded wall
-    * ~5-8× (112.9 s vs 21.7 s quiet on identical code), and that noise then
-    * lives forever in the driver's BENCH_r{N}.json. Gate the measured run
-    * on a quiet 1-minute load average: poll until load < maxLoad or the
-    * wait budget runs out (never hang the harness — a permanently busy box
-    * still produces a record, marked contended via the shipped load
-    * samples). Returns seconds waited. Must run BEFORE the SparkSession
-    * spins up: our own executor threads would otherwise feed the average
-    * we are gating on. */
+  /** Gate the measured run on a quiet 1-minute load average: poll until
+    * load < maxLoad or the wait budget runs out (a permanently busy box
+    * still produces a record, marked contended). Returns seconds waited.
+    * Must run BEFORE the SparkSession spins up: our own executor threads
+    * would otherwise feed the average we are gating on. */
   private def awaitQuietBox(maxLoad: Double, budgetSec: Int): Double = {
     val t0 = System.nanoTime()
     var load = loadAvg1m
@@ -196,92 +101,77 @@ object Bench {
     waited
   }
 
+  /** Heap pools whose peaks are reset before each repeat. The sum of
+    * per-pool peaks bounds the heap's peak from above (pools peak at
+    * different moments). */
+  private lazy val heapPools =
+    ManagementFactory.getMemoryPoolMXBeans.asScala.filter(_.getType == MemoryType.HEAP).toSeq
+  private def peakHeapMb: Long = heapPools.map(_.getPeakUsage.getUsed).sum / (1L << 20)
+
+  private def json[V](m: Map[String, V])(f: V => String): String =
+    m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_SF_DIR", "/root/testdata/sf0.001")
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0" &&
       new java.io.File(warmDir).isDirectory
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val threads = sys.env.getOrElse("SPARK_GRAFT_BENCH_THREADS", "8").toInt
     val maxLoad = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_LOAD", "5").toDouble
     val waitBudget = sys.env.getOrElse("SPARK_GRAFT_BENCH_WAIT_SEC", "300").toInt
     val waitedSec = awaitQuietBox(maxLoad, waitBudget)
-    // Round-11 verdict #2 / round-10 #5: a capture that proceeded with the
-    // box still loud must say so IN the record — a reader of BENCH_r{N}
-    // .json alone could not tell a 2x regression from neighbor noise. The
-    // snapshot protocol treats contended=true as "re-run before committing".
-    // contended is a PRE-SESSION verdict by construction: once our own
-    // local[32] executor threads spin up, the 1-min load average measures
-    // mostly US (round-12 verdict: repeat loads of 8-19 on an otherwise
-    // quiet box are self-load), so per-repeat samples cannot distinguish
-    // external contention — they ship in `load_avg_1m` for diagnosis, with
-    // `load_note` in the record saying exactly that.
+    // a PRE-SESSION verdict by construction: once our own executor threads
+    // spin up, the 1-min load average measures mostly us
     val contended = loadAvg1m >= maxLoad || waitedSec >= waitBudget
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.local("graft-bench")
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      // Object-hash aggregates (BoundedLongCollect, collect_list, sketches)
-      // fall back to SORT-based aggregation after 128 distinct keys per
-      // partition by default — a full sort of the dedup shingle streams.
-      // Every imperative buffer in this engine is structurally bounded
-      // (BoundedLongCollect caps at 64 longs, sketches are fixed-size), so
-      // 128k in-memory groups ≈ tens of MB per partition, far cheaper than
-      // the sort; past that the sort fallback still protects memory.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // reliable-checkpoint home for Reuse.materialize (local run: tmp dir;
-    // a cluster deployment points this at durable shared storage)
-    spark.sparkContext.setCheckpointDir(GraftSession.DefaultCheckpointDir)
-    val shuffleBytes = new ShuffleBytesListener
-    spark.sparkContext.addSparkListener(shuffleBytes)
-
-    def materialize(df: org.apache.spark.sql.DataFrame): Unit =
-      df.select(xxhash64(struct(col("*"))).cast("double").as("_h")) // double: ANSI long sum would overflow
-        .agg(sum(col("_h"))).head
+    val metrics = new QueryMetrics
+    spark.sparkContext.addSparkListener(metrics)
 
     /** Run `ordered` across `threads` worker threads (work-stealing via a
-      * shared cursor); returns per-query seconds, -1 for failures. */
-    def runAll(ordered: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
-        dir: String): Map[String, Double] = {
+      * shared cursor), each query tagged for [[QueryMetrics]]. */
+    def runAll(ordered: Seq[(String, (SparkSession, String) => DataFrame)],
+        dir: String): Map[String, QueryRun] = {
       val cursor = new AtomicInteger(0)
-      val out = new java.util.concurrent.ConcurrentHashMap[String, Double]()
+      val out = new java.util.concurrent.ConcurrentHashMap[String, QueryRun]()
       val workers = (0 until math.max(1, threads)).map { w =>
         val t = new Thread(() => {
           spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"bench$w")
           var i = cursor.getAndIncrement()
           while (i < ordered.size) {
             val (name, fn) = ordered(i)
-            // attribute this thread's jobs (and their captured side jobs)
-            // to the query for the shuffle-bytes listener
-            spark.sparkContext.setLocalProperty(shuffleBytes.Prop, name)
+            spark.sparkContext.setLocalProperty(QueryMetrics.Prop, name)
             val t0 = System.nanoTime()
-            val sec =
-              try { materialize(fn(spark, dir)); (System.nanoTime() - t0) / 1e9 }
-              catch { case e: Throwable =>
+            val run =
+              try {
+                val df = fn(spark, dir)
+                val buildMs = (System.nanoTime() - t0) / 1000000
+                val hashed = df.select(xxhash64(struct(col("*"))).cast("double").as("_h")) // double: ANSI long sum would overflow
+                  .agg(sum(col("_h")))
+                hashed.collect() // not head(): that plans a second, Limit-topped execution
+                val phases = hashed.queryExecution.tracker.phases
+                  .map { case (p, s) => p -> (s.endTimeMs - s.startTimeMs) }
+                QueryRun((System.nanoTime() - t0) / 1e9, buildMs, phases)
+              } catch { case e: Throwable =>
                 System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-                -1.0
+                QueryRun(-1.0, -1L, Map.empty)
               }
-            spark.sparkContext.setLocalProperty(shuffleBytes.Prop, null)
-            out.put(name, sec)
+            spark.sparkContext.setLocalProperty(QueryMetrics.Prop, null)
+            out.put(name, run)
             i = cursor.getAndIncrement()
           }
         }, s"bench-worker-$w")
         t.start(); t
       }
       workers.foreach(_.join())
-      import scala.jdk.CollectionConverters._
       out.asScala.toMap
     }
 
-    // Fixed alphabetical base order: per-query numbers stay comparable
-    // across rounds (Map iteration order shifts whenever the catalog
-    // changes).
-    // SPARK_GRAFT_BENCH_ONLY=name1,name2 — targeted local timing runs
-    // (never set by the driver; the contract run covers the full catalog).
+    // Fixed alphabetical base order keeps per-query numbers comparable
+    // across catalog changes. SPARK_GRAFT_BENCH_ONLY=name1,name2 — targeted
+    // local runs (the contract run covers the full catalog).
     val onlyFilter: String => Boolean =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet) match {
         case Some(names) => names.contains(_)
@@ -289,76 +179,62 @@ object Bench {
       }
     val queries = SparkEntry.queries.toSeq.filter(e => onlyFilter(e._1)).sortBy(_._1)
     val warmTimes: Map[String, Double] =
-      if (warmup) runAll(queries, warmDir) else Map.empty
+      if (warmup) runAll(queries, warmDir).map { case (k, r) => k -> r.sec } else Map.empty
     val order = queries.sortBy { case (n, _) => (-warmTimes.getOrElse(n, 0.0), n) }
 
-    // Best-of-N (default 3): on a shared box one contended sample can
-    // masquerade as a 5× regression (round-5 lesson: 82.6 s at load ~3.3 vs
-    // 14.1 s at load 1.5 on identical code). Each repeat records its wall
-    // and the 1-min load average at start; the headline is the BEST wall,
-    // per-query seconds are the min across repeats, and all samples ship in
-    // the record so a contended round is self-diagnosing.
+    // Best-of-N: on a shared box one contended sample can masquerade as a
+    // 5× regression, so the headline is the BEST wall, per-query seconds
+    // are the min across repeats, and all samples ship in the record.
     val repeats = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt)
-    // quiesce the async listener bus before EVERY snapshot: trailing
-    // TaskEnd events from the batch that just returned would otherwise
-    // bleed into the next repeat's tallies (round-12 ADVICE)
-    shuffleBytes.drainListenerBus(spark.sparkContext)
-    shuffleBytes.snapshotAndReset() // discard warmup tallies
-    // TWO unrecorded warmup calls (round-13 ADVICE): one invocation of the
-    // 150M-iteration loop may not reach the top JIT tier, and a repeat-1
-    // probe reading high for residual compilation would masquerade as a
-    // slow-box phase — the probe must measure weather, never JIT.
+    // quiesce the async listener bus before EVERY snapshot, so trailing
+    // task ends never bleed into the next repeat's tallies
+    metrics.drain(spark.sparkContext)
+    metrics.snapshotAndReset() // discard warmup tallies
+    // two unrecorded calls: the probe must measure weather, never JIT
     coreProbeSec(); coreProbeSec()
     val runs = (1 to repeats).map { _ =>
       val load = loadAvg1m
       val probe = coreProbeSec()
+      heapPools.foreach(_.resetPeakUsage())
       val t0 = System.nanoTime()
       val res = runAll(order, sfDir)
-      shuffleBytes.drainListenerBus(spark.sparkContext)
-      ((System.nanoTime() - t0) / 1e9, load, res, shuffleBytes.snapshotAndReset(), probe)
+      val wallSec = (System.nanoTime() - t0) / 1e9
+      metrics.drain(spark.sparkContext)
+      (wallSec, load, res, metrics.snapshotAndReset(), probe, peakHeapMb)
     }
-    // Per-query shuffle bytes: MAX across repeats. Deterministic plans give
-    // identical tallies every repeat (max is exact); memoized-model entries
-    // (v2/v3/v4 train once per dir) only shuffle on the repeat that trains,
-    // so max reports the cold-run bound instead of a misleading zero.
-    val shuffles = runs.map(_._4).reduce { (a, b) =>
+    // Per-query tallies: MAX across repeats. Deterministic plans give
+    // identical tallies every repeat; memoized-model entries (v2/v3/v4 train
+    // once per dir) only do that work on the repeat that trains, so max
+    // reports the cold-run bound instead of a misleading zero.
+    val tallies = runs.map(_._4).reduce { (a, b) =>
       (a.keySet ++ b.keySet).map { k =>
-        val (ar, aw) = a.getOrElse(k, (0L, 0L)); val (br, bw) = b.getOrElse(k, (0L, 0L))
-        k -> (math.max(ar, br), math.max(aw, bw))
+        k -> a.getOrElse(k, QueryMetrics.Zero).max(b.getOrElse(k, QueryMetrics.Zero))
       }.toMap
     }
-    val (wall, _, _, _, _) = runs.minBy(_._1)
+    val wall = runs.map(_._1).min
+    // each query's fastest repeat; -1 marks a failure and never wins
     val results = runs.map(_._3).reduce { (a, b) =>
       a.map { case (k, v) =>
         val w = b.getOrElse(k, v)
-        // -1 marks a failure; min() must not prefer it over a real timing
-        k -> (if (v < 0) w else if (w < 0) v else math.min(v, w))
+        k -> (if (v.sec < 0) w else if (w.sec < 0 || v.sec <= w.sec) v else w)
       }
     }
+    val secs = results.map { case (k, r) => k -> r.sec }
 
-    val qs = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val sumSec = results.valuesIterator.filter(_ >= 0).sum
-    val failures = results.valuesIterator.count(_ < 0)
+    val sumSec = secs.valuesIterator.filter(_ >= 0).sum
+    val failures = secs.valuesIterator.count(_ < 0)
     val walls = runs.map(_._1).mkString("[", ",", "]")
     val loads = runs.map(_._2).mkString("[", ",", "]")
     val probes = runs.map(_._5).mkString("[", ",", "]")
-    // Round-14 verdict #1: `contended` is a PRE-SESSION verdict, and a
-    // record whose repeats disagree wildly was shipping "contended: false"
-    // next to a 63% wall jump — two contradictory stories in one JSON.
-    // The in-run verdict uses the evidence the record already carries:
-    // repeats run IDENTICAL plans on identical data, so a wall spread or
-    // core-probe spread beyond noise (25%) is host weather by
-    // construction — nothing code-side differs between repeats. A single
-    // repeat can't self-diagnose this way (spread needs >= 2 samples);
-    // it reports false and the per-repeat fields remain the evidence.
+    // In-run contention: repeats run IDENTICAL plans on identical data, so
+    // a wall or core-probe spread beyond 25% is host weather. A single
+    // repeat can't self-diagnose this way and reports false.
     def spread(xs: Seq[Double]): Double = {
       val pos = xs.filter(_ > 0)
       if (pos.size < 2) 1.0 else pos.max / pos.min
     }
-    // repeat 1 pays the per-dir model training (v2/v3/v4 memoize per
-    // directory) — a structural ~2x every round, not contention — so the
-    // wall spread reads repeats 2..N when there are at least three
+    // repeat 1 pays the per-dir model training, so the wall spread reads
+    // repeats 2..N when there are at least three
     val steadyWalls = if (runs.size >= 3) runs.tail.map(_._1) else runs.map(_._1)
     val wallSpread = math.round(spread(steadyWalls) * 100) / 100.0
     val probeSpread = math.round(spread(runs.map(_._5)) * 100) / 100.0
@@ -367,35 +243,26 @@ object Bench {
       s""""contended_pre_session":$contended,"contended_during_run":$contendedDuringRun,""" +
         s""""wall_spread":$wallSpread,"core_probe_spread":$probeSpread,""" +
         s""""contention_note":"contended_pre_session gates on 1-min load before our own executors spin up; contended_during_run flags steady-state (repeat>=2) wall or core-probe spread >1.25x on identical plans - the one-loud-repeat class. UNIFORM host-weather inflation is invisible to every intra-run signal (r14: all repeats +34% with flat probes); compare walls cross-round at matching core_probe_sec, and re-capture on a quiet box before committing when either flag is true.""""
-    // A run with ANY failed query has no comparable wall: erroring queries
-    // cost ~0 s, so the total reads as a phantom speedup (round-7 lesson —
-    // 26 failures made a broken round look 1.8× faster). Emit value:null
-    // so a consumer reading only metric/value is FORCED to handle the
-    // invalid-run case; the failure count and per-query data still ship.
+    // A run with ANY failed query has no comparable wall (erroring queries
+    // cost ~0 s and read as a phantom speedup): value is null then.
     val headline = if (failures > 0) "null" else wall.toString
-    val shufR = shuffles.toSeq.sortBy(_._1)
-      .map { case (k, (r, _)) => s"\"" + k + "\":" + r }.mkString("{", ",", "}")
-    val shufW = shuffles.toSeq.sortBy(_._1)
-      .map { case (k, (_, w)) => s"\"" + k + "\":" + w }.mkString("{", ",", "}")
-    val shufRTotal = shuffles.valuesIterator.map(_._1).sum
-    val shufWTotal = shuffles.valuesIterator.map(_._2).sum
-    // ms-rounded per-query seconds for the stdout totals line: the driver's
-    // per-query comparator needs the map in the FINAL line (round-16
-    // PERF came back empty reading only totals), and rounding keeps the
-    // line ~6 KB instead of ~9 KB; BENCH_LOCAL.json keeps full precision.
-    val qsCompact = results.toSeq.sortBy(_._1)
-      .map { case (k, v) =>
-        val r = if (v < 0) "-1" else (math.round(v * 1000) / 1000.0).toString
-        s"\"" + k + "\":" + r
-      }.mkString("{", ",", "}")
+    val qsCompact = json(secs)(v => if (v < 0) "-1" else (math.round(v * 1000) / 1000.0).toString)
+    val common =
+      s""""sf":"$sfDir","threads":$threads,"sum_query_sec":$sumSec,"repeats":$repeats,"walls":$walls,"load_avg_1m":$loads,"core_probe_sec":$probes,"load_note":"per-repeat load_avg_1m samples include this bench's own local[${GraftSession.cpus}] load",$contentionJson,"waited_for_quiet_sec":$waitedSec,"contended":$contended"""
     val summary =
-      s"""{"metric":"total","value":$headline,"unit":"sec","n":${results.size},"failures":$failures,"queries":$qsCompact,"sf":"$sfDir","threads":$threads,"sum_query_sec":$sumSec,"repeats":$repeats,"walls":$walls,"load_avg_1m":$loads,"core_probe_sec":$probes,"load_note":"per-repeat load_avg_1m samples include this bench's own local[$cpus] load",$contentionJson,"waited_for_quiet_sec":$waitedSec,"contended":$contended,"shuffle_read_bytes_total":$shufRTotal,"shuffle_write_bytes_total":$shufWTotal}"""
+      s"""{"metric":"total","value":$headline,"unit":"sec","n":${secs.size},"failures":$failures,"queries":$qsCompact,$common,"shuffle_read_bytes_total":${tallies.valuesIterator.map(_.shuffleReadBytes).sum},"shuffle_write_bytes_total":${tallies.valuesIterator.map(_.shuffleWriteBytes).sum}}"""
+    def perQuery(f: QueryMetrics.Tally => Long): String = json(tallies)(t => f(t).toString)
     val full =
-      s"""{"metric":"total","value":$headline,"unit":"sec","queries":$qs,"sf":"$sfDir","threads":$threads,"sum_query_sec":$sumSec,"repeats":$repeats,"walls":$walls,"load_avg_1m":$loads,"core_probe_sec":$probes,"load_note":"per-repeat load_avg_1m samples include this bench's own local[$cpus] load",$contentionJson,"waited_for_quiet_sec":$waitedSec,"contended":$contended,"shuffle_read_bytes":$shufR,"shuffle_write_bytes":$shufW}"""
+      s"""{"metric":"total","value":$headline,"unit":"sec","queries":${json(secs)(_.toString)},$common,""" +
+        s""""shuffle_read_bytes":${perQuery(_.shuffleReadBytes)},"shuffle_write_bytes":${perQuery(_.shuffleWriteBytes)},""" +
+        s""""jobs":${perQuery(_.jobs)},"mem_spill_bytes":${perQuery(_.memSpillBytes)},""" +
+        s""""disk_spill_bytes":${perQuery(_.diskSpillBytes)},"peak_exec_mem_bytes":${perQuery(_.peakExecMemBytes)},""" +
+        s""""build_ms":${json(results)(_.buildMs.toString)},""" +
+        s""""phases_ms":${json(results)(r => json(r.phasesMs)(_.toString))},""" +
+        s""""peak_heap_mb":${runs.map(_._6).mkString("[", ",", "]")}}"""
     // A SPARK_GRAFT_BENCH_ONLY-filtered run must not clobber the committed
-    // full-suite record with an n=1 artifact (and a typo'd filter would
-    // silently persist n=0): targeted runs only write when the caller
-    // explicitly names an output file.
+    // full-suite record: targeted runs only write when the caller names an
+    // output file.
     val explicitOut = sys.env.get("SPARK_GRAFT_BENCH_OUT")
     if (sys.env.contains("SPARK_GRAFT_BENCH_ONLY") && explicitOut.isEmpty)
       System.err.println("[bench] filtered run: skipping BENCH_LOCAL.json (set SPARK_GRAFT_BENCH_OUT to persist)")
@@ -404,13 +271,7 @@ object Bench {
       java.nio.file.Files.write(out, (summary + "\n" + full + "\n").getBytes("UTF-8"))
     } catch { case e: Throwable => System.err.println(s"[bench] could not persist BENCH_LOCAL.json: ${e.getMessage}") }
     spark.stop()
-    // Self-evidencing headline, LAST (round-5 lesson: the driver parses the
-    // final stdout line as JSON; printed earlier it scrolls out of the tail
-    // window, printed under sbt's logger it gains an "[info] " prefix —
-    // build.sbt sets run/outputStrategy := StdoutOutput so this passes
-    // through unprefixed). Since round 17 the line carries the ms-rounded
-    // per-query map — the driver's comparator contract — full precision and
-    // per-query shuffle bytes stay in BENCH_LOCAL.json.
+    // the headline goes LAST: consumers parse the final stdout line
     println(summary)
   }
 }

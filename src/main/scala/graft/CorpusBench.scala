@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   *       0 everywhere for "bucketed" (the co-located-probe claim,
   *       asserted, not just printed), 1 per probe for "plain".
   *   runMain graft.CorpusBench chain <corpusSfDir> <sliceSfDir> <nSlices> [plain|bucketed]
-  *     — the endurance leg (round-14 verdict #6): n consecutive slices
+  *     — the endurance leg: n consecutive slices
   *       roll the state forward (each slice gets a fresh id range AND a
   *       slice-specific vocabulary so survivors flow every day), with
   *       per-slice walls recorded and the final corpus GATED equal to a
@@ -39,8 +39,7 @@ import org.apache.spark.sql.functions._
   *       tokenizer (multiset of doc_id/lang/n_tokens/shard via exact
   *       xxhash64-sum compare; the job aborts on mismatch). Layouts:
   *       "plain" (default) round-trips once mid-chain through
-  *       CorpusState.write/load — the original r14 leg; "bucketed"
-  *       (round-15 verdict #2) round-trips EVERY slice through
+  *       CorpusState.write/load; "bucketed" round-trips EVERY slice through
   *       writeBucketed/loadBucketed with a fresh directory AND a fresh
   *       tablePrefix per day — the actual daily rotation the writeGuard
   *       and the catalog-identity guard prescribe, yesterday's directory
@@ -50,33 +49,23 @@ import org.apache.spark.sql.functions._
   *       co-located plan, proven on the same run as the flat walls and
   *       the rebuild equality, not on a separate one-slice leg).
   *   runMain graft.CorpusBench divergence <corpusSfDir>
-  *     — measured incremental-vs-rebuild divergence RATES (round-15
-  *       verdict #6): see [[divergence]].
+  *     — measured incremental-vs-rebuild divergence RATES: see
+  *       [[divergence]].
   */
 object CorpusBench {
 
   private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-corpusbench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(GraftSession.DefaultCheckpointDir)
     spark
   }
-
-  private def cpusInt: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
   /** Fixture docs, repartitioned for per-doc CPU (the fixture parquet is
     * one row group → one task otherwise). */
   private def docsOf(spark: SparkSession, sfDir: String) =
     graft.io.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("text"))
-      .repartition(cpusInt * 2)
+      .repartition(GraftSession.cpus * 2)
 
   private def stagesJson(ms: Seq[graft.corpus.CorpusPipeline.Manifest]): String =
     ms.map(m => s""""${m.stage}":${m.rows}""").mkString("{", ",", "}")
@@ -250,7 +239,7 @@ object CorpusBench {
     spark.stop()
   }
 
-  // ---- divergence leg (round-15 verdict #6) --------------------------------
+  // ---- divergence leg -------------------------------------------------------
   //
   // The incremental mode documents FIVE divergence surfaces vs a full
   // rebuild (CorpusPipeline.runIncremental + SemDeDup.probeDrops

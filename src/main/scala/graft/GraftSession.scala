@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** Library entry point: a SparkSession builder preconfigured the way every
   * graft deployment should start, so `GraftSession.builder("app")
   * .master(...).getOrCreate()` is the one-liner between "cluster" and
-  * "running the catalog".
+  * "running the catalog". Every main in this repo builds its session here,
+  * through [[local]].
   *
   * What it pins, and why:
   *  - `spark.sql.extensions` → [[graft.functions.GraftExtensions]]: the
@@ -23,21 +24,26 @@ import org.apache.spark.sql.SparkSession
   *  - `spark.sql.parquet.compression.codec=zstd`: at 100 TB the scan is
   *    IO-bound; zstd trades a little CPU for materially smaller files
   *    than the default snappy.
+  *  - `spark.sql.legacy.parquet.nanosAsLong=true`: the only way to open a
+  *    TIMESTAMP(NANOS) parquet column (`io.Tables` reads `events.ts` under
+  *    either encoding); set once here so no reader mutates session state.
   *  - `spark.sql.shuffle.partitions`: caller-sized (default 200) — size
   *    it so a partition of your largest shuffle fits executor memory;
   *    AQE coalesces the small ones back down at runtime.
   */
 object GraftSession {
 
-  /** Default reliable-checkpoint home, shared by every entry point (this
-    * builder, `Bench`, `Verify`): one definition so the checkpoint home
-    * cannot silently diverge between them. On a cluster, override with
-    * durable shared storage. Each SparkContext checkpoints into its own
-    * UUID subdirectory under this path; `Reuse.materialize` registers a
-    * shutdown hook that deletes that subdirectory so repeated runs don't
-    * accumulate checkpoint blocks. */
+  /** Default reliable-checkpoint home, shared by every entry point. On a
+    * cluster, override with durable shared storage. Each SparkContext
+    * checkpoints into its own UUID subdirectory under this path;
+    * `Reuse.materialize` registers a shutdown hook that deletes that
+    * subdirectory so repeated runs don't accumulate checkpoint blocks. */
   val DefaultCheckpointDir: String =
     s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft-checkpoints"
+
+  /** Local cores for the mains: `SPARK_GRAFT_CPUS`, else every processor. */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** The configuration contract, exposed for inspection/tests. */
   def configs(shufflePartitions: Int): Map[String, String] = Map(
@@ -45,6 +51,7 @@ object GraftSession {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
     "spark.sql.parquet.compression.codec" -> "zstd",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
     // Object-hash aggregates (BoundedLongCollect, collect_list, sketches)
     // fall back to SORT-based aggregation after 128 distinct keys per
@@ -54,16 +61,12 @@ object GraftSession {
     // 128k in-memory groups is tens of MB per partition; past that the
     // sort fallback still protects memory.
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "131072",
-    // Reliable-checkpoint home for operators/Reuse.materialize (g6's edge
-    // reuse, and any multi-consumer intermediate): on a cluster, OVERRIDE
-    // this with durable shared storage (HDFS/object store) — an
-    // executor-local or node-local path defeats the recoverability the
-    // reliable path exists for. The default keeps single-JVM runs working
-    // out of the box; disk lifecycle is two-tier — the cleaner drops files
-    // for frames that get garbage-collected mid-session, and
-    // Reuse.materialize's shutdown hook removes this app's checkpoint
-    // subdirectory at exit (session-lifetime caches hold strong
-    // references, so the cleaner alone never fires for them).
+    // Reliable-checkpoint home for operators/Reuse, read by SparkContext at
+    // start: on a cluster, OVERRIDE this with durable shared storage — an
+    // executor-local path defeats the recoverability the reliable path
+    // exists for. The cleaner drops files for frames garbage-collected
+    // mid-session; Reuse.materialize's shutdown hook removes this app's
+    // subdirectory at exit.
     "spark.checkpoint.dir" -> DefaultCheckpointDir,
     "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true")
 
@@ -74,4 +77,9 @@ object GraftSession {
       case (b, (k, v)) => b.config(k, v)
     }
   }
+
+  /** [[builder]] for a single-JVM `local[cpus]` run with the web UI off,
+    * one shuffle partition per core. */
+  def local(appName: String): SparkSession.Builder =
+    builder(appName, cpus).master(s"local[$cpus]").config("spark.ui.enabled", "false")
 }

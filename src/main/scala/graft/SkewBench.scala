@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.Skew
 
 /** Measured evidence for the skew story (SURVEY §4; BENCH.md "skew has
-  * explicit handles" — until now argued, not measured, the same gap the
-  * round-8 verdict called on streaming before `StreamBench`).
+  * explicit handles").
   *
   * The harness builds the pathological shape the handles exist for and
   * times each mitigation against the unmitigated plan ON THE SAME DATA,
@@ -107,12 +106,7 @@ object SkewBench {
       .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val repeats = if (args.length > 1) args(1).toInt else 2
     val fanout = if (args.length > 2) args(2).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
-    val spark = GraftSession.builder("graft-skewbench", shufflePartitions = cpus.toInt)
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-skewbench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // The dimension must NOT broadcast in any arm: at fixture scale every

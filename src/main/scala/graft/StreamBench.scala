@@ -7,9 +7,8 @@ import org.apache.spark.sql.functions._
 
 import graft.streaming.EventStreams
 
-/** Throughput measurement of the STREAMING path itself (round-8 verdict
-  * #5): every streaming operator is correctness-proven by batch twins +
-  * MemoryStream specs, but those say nothing about what the RocksDB
+/** Throughput measurement of the STREAMING path itself: every streaming
+  * operator is correctness-proven by batch twins + MemoryStream specs, but those say nothing about what the RocksDB
   * pipeline sustains. This main replays the events fixture through the
   * real Structured Streaming engine — file source staged as range-sorted
   * parquet splits so the replay arrives in event-time order and watermark
@@ -32,7 +31,7 @@ import graft.streaming.EventStreams
   * arg 1 = sf dir, arg 2 = micro-batch file count).
   *
   * `runMain graft.StreamBench corpus [baseSfDir] [sliceSfDir] [nSlices]`
-  * runs the streamed CORPUS ingest leg instead (round-15 verdict #7):
+  * runs the streamed CORPUS ingest leg instead:
   * [[graft.corpus.StreamingIngest]] drives runIncremental from a file
   * stream, one staged slice per trigger with the state rotated to a
   * fresh directory each batch, then the result is GATED equal (exact
@@ -57,21 +56,13 @@ object StreamBench {
     * Prints one JSON line; exits 1 if the streamed corpus differs from
     * the batch chain over the identical staged slices. */
   private def corpusIngest(baseSf: String, sliceSf: String, n: Int): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-streambench-corpus").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(GraftSession.DefaultCheckpointDir)
     val work = Files.createTempDirectory("graft-streamcorpus").toString
 
     def docsOf(dir: String) = graft.io.Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("text"))
-      .repartition(cpus.toInt * 2)
+      .repartition(GraftSession.cpus * 2)
     val docs = docsOf(baseSf)
     val heldOut = docs.filter(col("doc_id") % 97 === 0)
     val corpus = docs.filter(col("doc_id") % 97 =!= 0)
@@ -155,16 +146,9 @@ object StreamBench {
     val sfDir = args.headOption
       .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val files = if (args.length > 1) args(1).toInt else 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val work = Files.createTempDirectory("graft-streambench").toString
-
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     val spark = EventStreams.rocksDbStateStoreConfigs
-      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+      .foldLeft(GraftSession.local("graft-streambench")) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
@@ -182,10 +166,10 @@ object StreamBench {
     val schema = spark.read.parquet(staged).schema
     val nRows = spark.read.parquet(staged).count()
 
-    // State-rows BOUNDS (round-11 verdict #4): the scaladoc claims state ~
-    // keys / open windows / lag-window events, never stream length — now
-    // ASSERTED per pipeline, so a state leak (a lost watermark, a
-    // dropDuplicates without the watermark column, an unbounded key space)
+    // State-rows BOUNDS: state ~ keys / open windows / lag-window events,
+    // never stream length — ASSERTED per pipeline, so a state leak (a lost
+    // watermark, a dropDuplicates without the watermark column, an
+    // unbounded key space)
     // fails this main loudly instead of shipping as a big-but-unread
     // number. Keyed pipelines bound exactly: one state row per user
     // (transformWithState ValueState, flatMapGroupsWithState session), one
@@ -195,10 +179,9 @@ object StreamBench {
     // tail (4 of `files` range-balanced splits, cushioned 1.5x for range-
     // partitioner sampling imbalance) PLUS the 2h/1h lag windows. The lag
     // share is MEASURED off the fixture (rows within 2h of max ts), not
-    // assumed inside the cushion (round-12 ADVICE: a dense-timestamp
-    // fixture whose per-trigger span is below the 2h lag would legitimately
-    // hold more than two triggers' rows, and the old bound would fail on a
-    // fixture property rather than a watermark leak). Still sub-linear on
+    // assumed inside the cushion: a dense-timestamp fixture whose
+    // per-trigger span is below the 2h lag legitimately holds more than two
+    // triggers' rows. Still sub-linear on
     // any real (long) stream — the claim under test — and a broken
     // watermark holds 100% and fails.
     val statsDf = spark.read.parquet(staged)
@@ -233,10 +216,8 @@ object StreamBench {
       val wall = (System.nanoTime() - t0) / 1e9
       val progresses = q.recentProgress
       // batch count from the last committed batchId, NOT recentProgress
-      // length (round-9 ADVICE: recentProgress retains only the last
-      // spark.sql.streaming.numRecentProgressUpdates=100 entries, so a
-      // larger file count would silently understate the count; batchId is
-      // monotonic and retention-free)
+      // length: recentProgress retains only the last
+      // spark.sql.streaming.numRecentProgressUpdates=100 entries
       val batches = Option(q.lastProgress).map(_.batchId + 1).getOrElse(0L)
       // final state snapshot: last progress that carries state operators
       // (every stateful query's progress reports its state operators, so
@@ -253,10 +234,8 @@ object StreamBench {
         System.err.println(
           s"[streambench] STATE BOUND VIOLATED: $name state_rows=$stateRows > bound=$stateBound")
       }
-      // files_per_trigger ships IN the record (round-15 ADVICE): the
-      // join's default trigger size changed 4 → 16 in round 15 under the
-      // same metric name, so cross-round readers of same-name records
-      // need the config self-described, not inferred from round notes
+      // files_per_trigger ships IN the record: same-name records taken at
+      // different trigger sizes must describe themselves
       println(
         s"""{"pipeline":"$name","rows":$nRows,"wall_sec":${f"$wall%.2f"},""" +
           s""""rows_per_sec":${(nRows / wall).toLong},"batches":$batches,""" +
@@ -274,9 +253,8 @@ object StreamBench {
     }
     run("tumbling_counts", "update", stateBound = hourTypeGroups)(
       df => EventStreams.tumblingCounts(df))
-    // 16 files/trigger is the join's DEFAULT as of round 15 (round-14
-    // verdict #7): the round-12 A/B showed the join's throughput at 4
-    // files/trigger is dominated by per-micro-batch state-store commit
+    // 16 files/trigger is the join's default: at 4 files/trigger the
+    // join's throughput is dominated by per-micro-batch state-store commit
     // overhead (RocksDB changelog upload × 2 join state stores × every
     // batch), not by the join itself — 4x larger triggers amortize it to
     // ~2x the rows/s with identical results (trigger granularity is an
@@ -290,7 +268,7 @@ object StreamBench {
       stateBound = joinTailBound(4))(
       df => EventStreams.clickPurchaseJoin(df))
 
-    // ---- Recovery measurement (round-9 verdict #6) --------------------------
+    // ---- Recovery measurement ------------------------------------------------
     // Steady state is half the story: the 100 TB posture claims changelog
     // checkpointing makes a mid-replay failure cheap. Measure it: run the
     // transformWithState pipeline, kill the query after `killAfter`

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,20 +9,8 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def selected(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same object-hash-aggregate tuning as GraftSession/Bench (bounded
-      // buffers make 128k in-memory groups safe; see GraftSession.configs)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // reliable-checkpoint home for Reuse.materialize (local run: tmp dir;
-    // a cluster deployment points this at durable shared storage)
-    spark.sparkContext.setCheckpointDir(GraftSession.DefaultCheckpointDir)
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries.filter(e => selected(e._1)).foreach { case (name, fn) =>
@@ -37,10 +24,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: $msg")
         failed(name) = msg
         // A failed query must surface as a RED correctness row, never a
-        // dropped one (round 7: 26 plan errors silently shrank the gate from
-        // 131 to 108 "all-green" entries). Overwrite any stale output with a
-        // one-row sentinel whose schema can't match any oracle, so the
-        // driver's compare runs and records the mismatch loudly.
+        // dropped one: overwrite any stale output with a one-row sentinel
+        // whose schema can't match any oracle, so the oracle compare runs
+        // and records the mismatch loudly.
         import spark.implicits._
         Seq(("GRAFT_QUERY_ERROR: " + msg.take(500)))
           .toDF("graft_error").coalesce(1)
@@ -51,7 +37,7 @@ object Verify {
       System.err.println(s"[verify] ${failed.size} FAILED: ${failed.keys.mkString(", ")}")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // compare's json.load fail and silently zero the correctness record.
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"

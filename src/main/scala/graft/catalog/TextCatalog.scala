@@ -67,7 +67,7 @@ object TextCatalog {
           transform(slice(col("toks"), i + 2, lit(1)),
             y => struct(x.as("a"), y.as("b")))))).as("p"))
       .select(col("doc_id"), col("p.a").as("a"), col("p.b").as("b"))
-    // pc is MATERIALIZED (round-17, guide §2.4/§3.3): it feeds uc, the q
+    // pc is MATERIALIZED: it feeds uc, the q
     // join's probe side, and (through q) the per-doc verify join — without
     // the cut the physical plan re-ran the full bigram explode + partial
     // aggregate once per consumer (three Generate towers in t12's before
@@ -674,9 +674,9 @@ object TextCatalog {
         .filter(col("text").isNotNull)
         .select(col("doc_id"), toks(col("text")).as("toks"))
       val tok = t.select(col("doc_id"), explode(col("toks")).as("term"))
-      // df derived FROM tf (round-16): tf already holds one row per
-      // (doc, term), so COUNT(*) per term ≡ COUNT(DISTINCT doc_id) over the
-      // raw stream. Round-17: tf is MATERIALIZED (guide §2.4/§3.3) — it
+      // df derived FROM tf: tf already holds one row per (doc, term), so
+      // COUNT(*) per term ≡ COUNT(DISTINCT doc_id) over the raw stream. tf
+      // is MATERIALIZED — it
       // feeds the df rollup AND the scoring join, and column pruning split
       // the two consumers' exchanges, so the token explode + inverted-index
       // aggregate ran once per branch. One write of the (doc, term, tf)
@@ -1032,19 +1032,10 @@ object TextCatalog {
         FROM ranked
       """)) { (spark, dir) =>
       import org.apache.spark.sql.expressions.Window
-      // Round-17 (VERDICT r16 #3): `scored` feeds the phase-1 grid
-      // aggregate AND the phase-2 rank join, and without materialization
-      // the physical plan evaluates the whole bigram pipeline TWICE (no
-      // ReusedExchange — the grid branch prunes to (lang, b), so the
-      // canonicalized subtrees differ). Round 16 rejected
-      // Reuse.materialize on a SOLO measurement (1.53 → 1.97 s), where the
-      // twin subtrees run concurrently on idle cores by construction; the
-      // committed methodology is the 8-thread suite, where cores are NOT
-      // idle — t16 was the suite's most expensive entry at 4.6 s. Measured
-      // in-suite this round (8 threads, best-of-3): materialize wins
-      // (numbers in OPTIMIZATION_r17.md), and at corpus scale it is the
-      // only right form anyway (2× a 100 TB pipeline is never free — the
-      // g6 idiom, cluster-survivable reliable checkpoint).
+      // `scored` is materialised because it feeds both the phase-1 grid
+      // aggregate and the phase-2 rank join, and unmaterialised the plan
+      // evaluates the whole bigram pipeline twice (the grid branch prunes
+      // to (lang, b), so no ReusedExchange can share it).
       val scored = graft.operators.Reuse.materializeFiles(bigramLmDocScores(spark, dir)
         .join(Tables.documents(spark, dir)
           .filter(col("lang").isNotNull)

@@ -23,13 +23,7 @@ object JobsMain {
 
   def main(args: Array[String]): Unit = {
     val Array(warehouseDir, jobName) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-jobs").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, warehouseDir, jobName)
     finally spark.stop()

@@ -28,13 +28,7 @@ object ApiMain {
     val warehouseDir = args.headOption.getOrElse(
       sys.error("usage: ApiMain <warehouseDir> [port]"))
     val port = args.lift(1).map(_.toInt).getOrElse(8000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-api").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val server = build(spark, warehouseDir, port).start()
     System.err.println(s"[api] serving on 127.0.0.1:${server.boundPort}")
@@ -56,7 +50,7 @@ object ApiMain {
     // don't exist; list endpoints must degrade to an empty page — the
     // reference's initialization-status path deliberately tolerates the
     // missing tables, so a fresh warehouse 500ing on GET /api/transactions
-    // would diverge (advisor round-6). The canonical mart schemas are
+    // would diverge. The canonical mart schemas are
     // DERIVED, not hand-written: run the same staging+mart builders Jobs
     // runs over empty canonical inputs — zero rows, so the plans never
     // execute, and the schemas can't drift from the real pipeline.

@@ -7,13 +7,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions hook registering the graft native expressions as
   * SQL functions, so they are reachable from `spark.sql` / pure-SQL
-  * clients, not only the Column API:
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)   // or
-  *   .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-  * }}}
+  * clients, not only the Column API. `graft.GraftSession` sets
+  * `spark.sql.extensions` to this class; a hand-built session can pass
+  * `withExtensions(new GraftExtensions)` instead.
   *
   * Registered: `float_vector_dot(a, b)`, `long_vector_sqdist(a, b)`,
   * `word_shingles(text, n)`,

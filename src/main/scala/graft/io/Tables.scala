@@ -13,19 +13,12 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Inferred-schema memo, keyed by resolved file path (round-16
-    * optimization, guide §1/§7.3): every bare-path `spark.read.parquet`
-    * re-infers its schema from the parquet footer — a driver-side,
-    * single-threaded ~50-150 ms stall PER READER CALL, measured at
-    * 150-750 ms of the build time of every catalog query (ProfilePhases,
-    * rep 3 — i.e. warm; q8's seven table reads cost 742 ms against
-    * 585 ms of actual execution). The schema of a fixture file is
-    * immutable for the life of a JVM, so infer once per path and hand
-    * the reader an explicit schema — exactly what a catalog table
-    * (Hive/Iceberg metastore) would do in production; plan shape,
-    * pushdown and results are untouched (verified: strict gate green,
-    * per-query shuffle bytes identical). NOT result caching: no row
-    * data, no file listings, only the StructType. */
+  /** Inferred-schema memo, keyed by resolved file path: a bare-path
+    * `spark.read.parquet` re-infers its schema from the parquet footer, a
+    * single-threaded driver stall of ~50-150 ms per reader call. A fixture
+    * file's schema is immutable for the life of a JVM, so infer once per
+    * path and hand the reader an explicit schema, as a metastore would.
+    * Only the StructType is cached: no row data, no file listings. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
@@ -38,23 +31,23 @@ object Tables {
     require(names.contains(name), s"unknown table $name")
     if (name == "events") {
       // The driver has shipped events.ts under two parquet encodings:
-      // TIMESTAMP(NANOS, isAdjustedToUTC=false) — which Spark 4 refuses by
-      // default — and plain timestamp[us]. The fixtures are regenerated
-      // outside our control, so branch on the schema the file actually
-      // declares instead of assuming either encoding.
-      //
-      // The nanosAsLong conf is the only way to open NANOS parquet (no
-      // per-read option exists); it only changes how NANOS columns are typed,
-      // so setting it unconditionally is harmless for µs fixtures, and it
-      // must be set before the read plans its schema. Under it a NANOS column
-      // arrives as LongType → integer-divide raw nanos to a µs TIMESTAMP_NTZ,
-      // epoch-anchored so the NTZ value is independent of
-      // spark.sql.session.timeZone. A µs column already arrives as a
-      // timestamp type (NTZ for isAdjustedToUTC=false) → pass through.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = readWithMemoizedSchema(spark, s"$sfDir/$name.parquet")
+      // TIMESTAMP(NANOS, isAdjustedToUTC=false) and plain timestamp[us]. A
+      // NANOS column opens only under spark.sql.legacy.parquet.nanosAsLong
+      // (pinned by GraftSession.configs) and arrives as LongType → integer-
+      // divide raw nanos to a µs TIMESTAMP_NTZ, epoch-anchored so the value
+      // is independent of spark.sql.session.timeZone. A µs column already
+      // arrives as a timestamp type → pass through.
+      def missingConf(cause: Throwable) = new IllegalStateException(
+        s"$sfDir/events.parquet stores ts as TIMESTAMP(NANOS), which needs " +
+          "spark.sql.legacy.parquet.nanosAsLong=true: build the session with GraftSession", cause)
+      val nanosAsLong = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "true"
+      val df =
+        try readWithMemoizedSchema(spark, s"$sfDir/$name.parquet")
+        catch { case e: Exception if !nanosAsLong && String.valueOf(e.getMessage).contains("NANOS") =>
+          throw missingConf(e) }
       df.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
+          if (!nanosAsLong) throw missingConf(null)
           df.withColumn("ts",
             org.apache.spark.sql.functions.expr(
               "timestampadd(MICROSECOND, ts div 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"))
@@ -90,10 +83,8 @@ object Tables {
       math.max(nFiles, splitEst)
     })
 
-  /** Scale-adaptive fan-out for CPU-heavy map work over a fact scan
-    * (round-16 optimization, guide §2.5 "input skew: one huge unsplittable
-    * file ... repartition immediately after the read"): when the file
-    * layout caps scan parallelism below the cluster's cores (the
+  /** Scale-adaptive fan-out for CPU-heavy map work over a fact scan: when
+    * the file layout caps scan parallelism below the cluster's cores (the
     * single-row-group fixture case — measured: x13's 1.2M md5 calls ran on
     * ONE core for 1.1 s), exchange the projected rows once and run the map
     * stage wide. When the layout already parallelizes (many files / large

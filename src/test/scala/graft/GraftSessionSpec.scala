@@ -16,6 +16,7 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(c("spark.sql.session.timeZone") == "UTC")
     assert(c("spark.sql.adaptive.skewJoin.enabled") == "true")
     assert(c("spark.sql.parquet.compression.codec") == "zstd")
+    assert(c("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(c("spark.sql.shuffle.partitions") == "64")
   }
 

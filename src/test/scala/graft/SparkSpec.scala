@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for test suites. Small shuffle-partition count:
-  * test fixtures are tiny and 200 empty partitions only slow the suite. */
+/** Shared local SparkSession for test suites, on the GraftSession contract.
+  * Four cores and shuffle partitions: test fixtures are tiny and 200 empty
+  * partitions only slow the suite. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
@@ -14,15 +15,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // reliable-checkpoint home so Reuse.materialize exercises the same
-    // (durable) path in tests that a cluster deployment runs
+    val s = GraftSession.builder("graft-test", shufflePartitions = 4)
+      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    // a per-run reliable-checkpoint home so Reuse.materialize exercises the
+    // same (durable) path in tests that a cluster deployment runs
     s.sparkContext.setCheckpointDir(
       java.nio.file.Files.createTempDirectory("graft-test-ckpt").toString)
     s

@@ -2,11 +2,10 @@ package graft.catalog
 
 import graft.SparkSpec
 
-/** Automated scale-killer lint over EVERY catalog query's physical plan —
-  * the check the round-3 judge ran by hand ("full-suite plan lint: no
-  * cartesian products, BNLJ only by design"), pinned as a spec so a
+/** Automated scale-killer lint over EVERY catalog query's physical plan
+  * (no cartesian products, BNLJ only by design), pinned as a spec so a
   * regression in any future query or in an optimizer-visible rewrite
-  * fails `sbt test` instead of surviving until a judge reads plans.
+  * fails `sbt test`.
   *
   * CartesianProduct: never acceptable — at 100 TB it is a job that does
   * not finish. BroadcastNestedLoopJoin: only for the three deliberate
@@ -33,7 +32,7 @@ class PlanLintSpec extends SparkSpec {
     "s11_ivf_recall", "s12_ivf_recall_curve")
 
   /** Queries allowed to carry a forced `broadcast()` hint on a side that
-    * reads table data (round-8 verdict #7's lint). A hint whose subtree is
+    * reads table data. A hint whose subtree is
     * only LocalRelation/OneRowRelation/Range leaves (literal mapping/seed/
     * pattern/guard frames) is automatically fine — it cannot grow with the
     * data. A hint over scanned data is only sound when the side is a
@@ -90,8 +89,7 @@ class PlanLintSpec extends SparkSpec {
   }
 
   test("broadcast audit allowlist carries no stale entries") {
-    // The inverse direction (round-9 ADVICE): boundedBroadcastByDesign is
-    // an AUDIT of hints that exist, not a grant of hints that may exist.
+    // The inverse direction: boundedBroadcastByDesign is an AUDIT of hints that exist, not a grant of hints that may exist.
     // If a refactor removes a query's scan-backed broadcast hint (the
     // t10/t11 un-hinting did exactly this), its allowlist entry must go
     // too — otherwise the map rots and a future unsound hint on that
@@ -127,7 +125,7 @@ class PlanLintSpec extends SparkSpec {
     * windowed row count is an operator constant (a grid, a top-k, a capped
     * bucket) — never a function of corpus size.
     *
-    * The audit is PER WINDOW SHAPE, not per query name (round-11 ADVICE):
+    * The audit is PER WINDOW SHAPE, not per query name:
     * each entry pins the exact normalized flagged-window signature
     * (detector output; exprIds, casts and zoneIds stripped — the
     * Spark-version-sensitive toString noise — then sorted, "; "-joined).
@@ -157,8 +155,8 @@ class PlanLintSpec extends SparkSpec {
       "THE two-phase rank: the constant-key offsets window runs over 256 bucket counts, never the corpus (the per-bucket rank window partitions by the md5 bucket expression — corpus-keyed, unflagged)"),
     "o5_registry_history" -> ("Window(coalesce(pmod(year(o_orderdate), 1), 0))",
       "model-registry history: rows = training runs (fixture synthesizes a thin 1/97 orders slice)"),
-    "x14_dsir_selection" -> ("Window(coalesce(pmod((conv(substring(md5(w), 1, 15), 16, 10, true) % 64), 1), 0))",
-      "ratio-model totals over the 64-bucket hashed-unigram grid: operator constant"),
+    "x14_dsir_selection" -> ("Window(coalesce(pmod(bucket, 1), 0))",
+      "ratio-model totals over the 64-bucket hashed-unigram grid: `bucket` is md5(w) % 64 computed BEFORE the materializeFiles read-back, and the window runs over the per-bucket count aggregate of that read-back, so the flagged key is the read-back column, not the inline expression — <=64 grid rows, an operator constant"),
     "v1_vocab_build" -> ("Window(pmod(count(1), 1))",
       "dense-id assignment over the top-1000 rows AFTER the limit: operator constant"),
     "t13_langid_confusion" -> ("Window(lang)",
@@ -220,15 +218,13 @@ class PlanLintSpec extends SparkSpec {
     // exprIds (#123L) stripped so the string is stable across sessions —
     // what remains is the partition-spec SHAPE, which is what the audit
     // pins. Casts are stripped at the EXPRESSION level and zoneIds
-    // (`, Some(UTC)`) at the string level before rendering (round-12
-    // ADVICE): they are exactly the toString spellings a Spark minor bump
+    // (`, Some(UTC)`) at the string level before rendering: they are exactly the toString spellings a Spark minor bump
     // rewords, and neither changes a partition key's cardinality — without
     // this, a version bump fails every allowlisted entry at once instead
     // of producing at most one genuine re-audit.
     def stripCasts(e: Expression): Expression =
       e.transformUp { case c: Cast => c.child }
-    // zoneId strip anchored to zone-name spellings (round-13 ADVICE): a
-    // bare `, Some\([^)]*\)` stops at the FIRST `)`, so a partition
+    // zoneId strip anchored to zone-name spellings: a bare `, Some\([^)]*\)` stops at the FIRST `)`, so a partition
     // expression whose toString carries a nested-paren or non-zoneId
     // `Some(...)` would be wrongly half-stripped into a confusing
     // signature mismatch instead of left intact for a genuine re-audit.
@@ -246,7 +242,7 @@ class PlanLintSpec extends SparkSpec {
   }
 
   test("fixed-cardinality-partition windows only where the windowed input is bounded by design") {
-    // The sort-funnel lint (round-10 verdict #1). A Window partitioned by
+    // The sort-funnel lint. A Window partitioned by
     // nothing, a constant, or a fixed-cardinality key sorts corpus-sized
     // groups on a bounded reducer count: fine when the windowed input is
     // an operator-bounded grid (x11's range-bucket offsets, x14's 64-row
@@ -281,7 +277,7 @@ class PlanLintSpec extends SparkSpec {
   }
 
   test("the detector catches the regressed t16 form (per-language corpus-sized window)") {
-    // The done-criterion of the lint: t16's round-10 first draft ranked
+    // The done-criterion of the lint: t16's first draft ranked
     // with ROW_NUMBER() OVER (PARTITION BY lang ORDER BY score) — every
     // language's whole corpus slice through one reducer. Reconstruct that
     // shape and assert the detector flags it; the shipped two-phase t16

@@ -3,14 +3,13 @@ package graft.io
 import graft.SparkSpec
 import org.apache.spark.sql.types._
 
-/** Fixture-schema drift guard (round-7 lesson).
+/** Fixture-schema drift guard.
   *
-  * The driver owns `/root/testdata` and has regenerated it mid-round once
-  * already — round 7's fixtures switched `events.ts` from parquet
-  * TIMESTAMP(NANOS) to timestamp[us], and the hard-coded reader turned that
-  * single change into 26 scattered query errors. This spec pins the schema
-  * every engine component assumes, AS SEEN THROUGH `Tables.apply` (i.e. after
-  * any reader normalization), so the next fixture regeneration fails as one
+  * The fixtures are generated outside this repo and have been regenerated
+  * before — once switching `events.ts` from parquet TIMESTAMP(NANOS) to
+  * timestamp[us], which a hard-coded reader turned into 26 scattered query
+  * errors. This spec pins the schema every engine component assumes, AS
+  * SEEN THROUGH `Tables.apply` (i.e. after any reader normalization), so the next fixture regeneration fails as one
   * obvious assertion here instead of a pile of analysis errors elsewhere.
   *
   * Timestamp-ish columns accept either TIMESTAMP or TIMESTAMP_NTZ: which one
@@ -75,10 +74,39 @@ class FixtureSchemaSpec extends SparkSpec {
   }
 
   test("events reader normalizes regardless of raw encoding (nanos or µs)") {
-    // Post-reader, ts must be usable as a timestamp in expressions — the
-    // exact failure mode of round 7 was an analysis error here.
+    // Post-reader, ts must be usable as a timestamp in expressions.
     val df = Tables.events(spark, sfDir)
     val row = df.selectExpr("min(ts)", "max(ts)").head()
     assert(!row.isNullAt(0) && !row.isNullAt(1))
+  }
+
+  test("reading events leaves the session's conf untouched") {
+    val session = spark.newSession()
+    val before = session.conf.getAll
+    Tables.events(session, sfDir).schema
+    assert(session.conf.getAll == before)
+  }
+
+  test("a NANOS events.ts opens on the GraftSession contract and names it when missing") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = java.nio.file.Files.createTempDirectory("graft-nanos-events").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema).build()
+    w.write(new SimpleGroupFactory(schema).newGroup().append("ts", 1700000000123456789L))
+    w.close()
+    val bare = spark.newSession()
+    bare.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    def refused(): Unit = {
+      val e = intercept[IllegalStateException](Tables.events(bare, dir))
+      assert(e.getMessage.contains("GraftSession"), e.getMessage)
+    }
+    refused() // schema inference fails without the conf
+    val ts = Tables.events(spark, dir).selectExpr("cast(ts AS STRING)").head.getString(0)
+    assert(ts == "2023-11-14 22:13:20.123456")
+    refused() // the memoized LongType schema is refused too
   }
 }
